@@ -1,6 +1,14 @@
 """TraceEngine — facade mirroring the reference's 9 gRPC endpoints
-(reader/.../services/TraceService.scala:50-134) as Python functions returning
-DataFrames (SURVEY.md §7.0).
+(reader/.../services/TraceService.scala:50-134) as Python functions
+(SURVEY.md §7.0).
+
+Index scans and aggregations (search ids, counts, field values, raw key
+lookups) are lazy DataFrame plans. Answers bounded by the request (at most
+``limit`` traces, or one trace) are computed on the driver, as the
+reference's reader does (TraceReader.scala:70-90,127-155): the ids are
+collected, their stored rows key-looked-up, the transformer chain run
+in-process, and the result handed back as an Arrow-backed local frame
+(``session.local_frame``) whose collect runs no Spark job.
 
 Endpoints: get_trace, get_raw_trace, get_raw_span, search_traces,
 get_field_names, get_field_values, get_trace_counts, get_raw_traces,
@@ -8,6 +16,8 @@ get_trace_call_graph.
 """
 
 from __future__ import annotations
+
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -24,21 +34,20 @@ from haystack_traces_spark.operators.field_values import (
     field_values,
 )
 from haystack_traces_spark.operators.index import build_trace_index
+from haystack_traces_spark.schemas import SPAN, TRACE
+from haystack_traces_spark.session import local_frame
 from haystack_traces_spark.sources.spans import (
     build_trace_store,
     get_raw_span,
     get_raw_trace,
     read_trace_records,
 )
-from haystack_traces_spark.transform.pipeline import (
-    TraceProcessor,
-    process_single,
-    transform_traces,
-)
+from haystack_traces_spark.transform.pipeline import TraceProcessor, process_single
+from haystack_traces_spark.transform.transformers import InvalidTraceError
 
 
 class TraceEngine:
-    """Holds the engine tables; every method is a lazy DataFrame plan.
+    """Holds the engine tables and answers the nine reader endpoints.
 
     Construct from a flat spans DataFrame (batch) or attach pre-built
     parquet-backed tables (the streaming ingest writes those).
@@ -66,6 +75,10 @@ class TraceEngine:
         # into every key lookup with per-backend recover-to-empty — the
         # reference's multi-backend reader config (GrpcTraceReaders.scala:52-66)
         self.extra_backends = list(extra_backends or [])
+        # reads that recovered an unreachable extra backend to empty; the
+        # lock keeps concurrent readers from losing a count
+        self.backend_failures = 0
+        self._failures_lock = threading.Lock()
         self.trace_index = (
             trace_index
             if trace_index is not None
@@ -89,7 +102,9 @@ class TraceEngine:
             try:
                 dfs.append(b() if callable(b) else b)
             except Exception:
-                continue  # dead backend → empty contribution
+                # dead backend → empty contribution, counted
+                with self._failures_lock:
+                    self.backend_failures += 1
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -99,16 +114,22 @@ class TraceEngine:
     def search_traces(
         self, req: search_ops.SearchRequest, processed: bool = True
     ) -> DataFrame:
-        """Index→fetch→(optionally) per-trace pipeline; invalid traces are
-        dropped and counted (TraceReader.scala:82-90)."""
-        traces = search_ops.search_traces(
-            self.trace_index, self._store(), req, self.whitelist
-        )
+        """Index → collect the ≤``limit`` ids → key-lookup. Raw traces come
+        back as the lazy regrouped lookup; processed ones run the
+        transformer chain per trace on the driver, in search order, and
+        invalid traces are dropped (TraceReader.scala:82-90)."""
+        ids = [r["traceid"] for r in self.search_trace_ids(req).collect()]
         if not processed:
-            return traces
-        flat = traces.select(F.explode("spans").alias("s")).select("s.*")
-        out = transform_traces(flat, self.processor)
-        return out.groupBy("trace_id").agg(F.collect_list(F.struct("*")).alias("spans"))
+            return self.get_raw_traces(ids)
+        rows = []
+        for tid, spans in self._lookup(ids).items():
+            try:
+                rows.append(
+                    {"trace_id": tid, "spans": process_single(tid, spans, self.processor)}
+                )
+            except InvalidTraceError:
+                continue
+        return local_frame(self.spans.sparkSession, rows, TRACE)
 
     def search_trace_ids(self, req: search_ops.SearchRequest) -> DataFrame:
         return search_ops.search_trace_ids(self.trace_index, req, self.whitelist)
@@ -117,11 +138,24 @@ class TraceEngine:
     def get_trace(self, trace_id: str):
         """Processed single trace; raises InvalidTraceError on bad traces
         (fail-fast getTrace semantics, TraceReader.scala:44-51)."""
-        rows = get_raw_trace(self._store(), trace_id).collect()
-        if not rows:
+        spans = self._lookup([trace_id]).get(trace_id)
+        if spans is None:
             return []
-        spans = [s.asDict(recursive=True) for s in rows[0]["spans"]]
         return process_single(trace_id, spans, self.processor)
+
+    def _lookup(self, trace_ids: list[str]) -> dict[str, list]:
+        """Driver-side key lookup: every stored row of the given ids,
+        merged per trace into span dicts (the TraceMerger re-union, J2),
+        keyed in ``trace_ids`` order; ids with no stored row are absent."""
+        if not trace_ids:
+            return {}
+        found: dict[str, list] = {}
+        rows = read_trace_records(self._store(), trace_ids).select("trace_id", "spans")
+        for row in rows.collect():
+            found.setdefault(row["trace_id"], []).extend(
+                s.asDict(recursive=True) for s in row["spans"]
+            )
+        return {t: found[t] for t in dict.fromkeys(trace_ids) if t in found}
 
     def get_raw_trace(self, trace_id: str) -> DataFrame:
         return get_raw_trace(self._store(), trace_id)
@@ -163,15 +197,7 @@ class TraceEngine:
 
     # -- graph -------------------------------------------------------------
     def get_trace_call_graph(self, trace_id: str) -> DataFrame:
-        rows = get_raw_trace(self._store(), trace_id).collect()
-        if not rows:
-            spark = self.spans.sparkSession
-            return trace_call_graph(
-                spark.createDataFrame([], self.spans.schema)
-            )
-        spans = [s.asDict(recursive=True) for s in rows[0]["spans"]]
-        processed = process_single(trace_id, spans, self.processor)
-        spark = self.spans.sparkSession
-        from haystack_traces_spark.schemas import SPAN
-
-        return trace_call_graph(spark.createDataFrame(processed, SPAN))
+        """Edges of the processed trace (TraceReader.scala:127-155); an
+        unknown id gives no edges, an invalid trace raises like get_trace."""
+        spans = self.get_trace(trace_id)
+        return trace_call_graph(local_frame(self.spans.sparkSession, spans, SPAN))

@@ -168,12 +168,28 @@ def memo_plan(spark: SparkSession, sf_dir: str, key: str, build):
     if df is None:
         # prune entries of stopped sessions on miss (VERDICT r12 ask #7):
         # a new applicationId means every old app's plan objects are dead
-        # weight — drop them so sequential sessions cannot accumulate.
-        for stale in [sk for sk in _plan_memo if sk[0] != app_id]:
-            del _plan_memo[stale]
+        # weight — drop them so sequential sessions cannot accumulate. The
+        # keys are snapshotted first: another thread may insert while this
+        # one prunes, and iterating the live dict would then raise.
+        for stale in [sk for sk in list(_plan_memo) if sk[0] != app_id]:
+            _plan_memo.pop(stale, None)
         df = build()
         _plan_memo[k] = df
     return df
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema):
+    """A DataFrame over driver-held rows (dicts keyed by ``schema``'s field
+    names), handed to the JVM as one Arrow table. It plans as a
+    ``LocalRelation``: collecting it, or a filter/projection over it, runs
+    no Spark job and starts no Python worker, where
+    ``spark.createDataFrame(list)`` ships the rows through a PythonRDD job.
+    For request-bounded answers (a few traces), not corpus-scale data."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 # Frames pinned by materialize(), released via release_materialized() —

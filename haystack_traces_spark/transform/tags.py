@@ -36,15 +36,21 @@ AUTOGEN_ROOT_COUNT = "X-HAYSTACK-AUTOGEN-ORIGINAL-ROOT-COUNT"
 SPAN_KIND_TAG = "span.kind"
 
 
-def tag_str(tags: Column | str, key: str) -> Column:
-    """String value of the first tag with the given key (any vtype)."""
-    tags_c = F.col(tags) if isinstance(tags, str) else tags
-    # try_element_at: ANSI-safe on empty arrays (no-tag spans)
-    hit = F.try_element_at(F.filter(tags_c, lambda t: t["key"] == key), F.lit(1))
-    return (
-        F.when(hit["vtype"] == "STRING", hit["vstr"])
-        .when(hit["vtype"] == "LONG", hit["vlong"].cast("string"))
-        .when(hit["vtype"] == "DOUBLE", hit["vdouble"].cast("string"))
-        .when(hit["vtype"] == "BOOL", hit["vbool"].cast("string"))
-        .when(hit["vtype"] == "BINARY", hit["vbytes"].cast("string"))
+def tag_str(tags: str, key: str) -> Column:
+    """String value of the first tag with the given key (any vtype).
+
+    Built as one SQL string: the JVM parses it in a single call, where the
+    same expression assembled from Python lambdas costs one py4j round trip
+    per node (on a 4-vCPU VM, ~50 ms vs ~1 ms per column). The per-vtype
+    CASE runs inside ``transform`` over the filtered matches, so the filter
+    is evaluated once per row (the ``span_funcs.tag_value`` shape);
+    ``try_element_at`` makes an empty or NULL tags array yield NULL."""
+    lit = key.replace("\\", "\\\\").replace("'", "\\'")
+    return F.expr(
+        f"try_element_at(transform(filter(`{tags}`, t -> t.key = '{lit}'), "
+        "t -> CASE t.vtype WHEN 'STRING' THEN t.vstr "
+        "WHEN 'LONG' THEN CAST(t.vlong AS STRING) "
+        "WHEN 'DOUBLE' THEN CAST(t.vdouble AS STRING) "
+        "WHEN 'BOOL' THEN CAST(t.vbool AS STRING) "
+        "WHEN 'BINARY' THEN CAST(t.vbytes AS STRING) END), 1)"
     )

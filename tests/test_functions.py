@@ -49,6 +49,48 @@ def test_tag_key_lookup_is_case_insensitive(spark):
     assert got == 3
 
 
+def test_tag_str_per_vtype_missing_empty_and_quoted_keys(spark):
+    """tag_str stringifies the FIRST tag with the key, whatever its vtype;
+    a missing key, an empty and a NULL tags array give NULL; quotes and
+    backslashes in the key are matched literally."""
+    from haystack_traces_spark.session import local_frame
+    from haystack_traces_spark.transform.tags import tag_str
+
+    tags_per_row = [
+        [string_tag("k", "s"), string_tag("k", "second")],
+        [long_tag("k", 42)],
+        [tag("k", "DOUBLE", vdouble=1.5)],
+        [tag("k", "BOOL", vbool=True)],
+        [tag("k", "BINARY", vbytes=b"ab")],
+        [string_tag("other", "x")],
+        [],
+        None,
+        [string_tag("it's", "quoted"), string_tag("a\\b", "slashed")],
+    ]
+    rows = [
+        dict(span(trace_id="t", span_id=f"s{i}"), tags=tags)
+        for i, tags in enumerate(tags_per_row)
+    ]
+    df = local_frame(spark, rows, SPAN)
+    got = [
+        tuple(r)
+        for r in df.orderBy("span_id").select(
+            tag_str("tags", "k"), tag_str("tags", "it's"), tag_str("tags", "a\\b")
+        ).collect()
+    ]
+    assert got == [
+        ("s", None, None),
+        ("42", None, None),
+        ("1.5", None, None),
+        ("true", None, None),
+        ("ab", None, None),
+        (None, None, None),
+        (None, None, None),
+        (None, None, None),
+        (None, "quoted", "slashed"),
+    ]
+
+
 def test_low_cardinality_duration_threshold(spark):
     """Durations above 20 s truncate to whole seconds; below pass through
     (IndexDocumentGenerator.scala:37,146-157)."""

@@ -188,6 +188,8 @@ def test_engine_reads_across_extra_backends(spark):
         r["span_id"] for r in spans.filter("trace_id = '7'").collect()
     }
     assert got and got == want  # both halves present despite the dead backend
+    # the dead backend degraded that read, and the engine counted it
+    assert engine.backend_failures == 1
 
 
 def test_missing_key_lookups_return_empty(spark):
@@ -460,3 +462,38 @@ def test_upsert_trace_index_promoted_and_cross_bucket(spark, tmp_path):
         grp["servicename"] for r in tx for grp in r["spans"]
     }
     assert svcs == {"svc_a", "svc_b"}
+
+
+def test_backend_failures_count_every_concurrent_degraded_read():
+    """Each read that recovers a dead backend to empty is counted once,
+    also when many threads read through one engine at the same time."""
+    import sys
+    import threading
+
+    from haystack_traces_spark.api import TraceEngine
+
+    def dead():
+        raise OSError("backend unreachable")
+
+    store = object()  # no live extra backend: the read returns the primary
+    engine = TraceEngine(
+        None, trace_store=store, trace_index=object(), service_catalog=object(),
+        extra_backends=[dead, dead],
+    )
+    n_threads, reads = 16, 200
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: [engine._store() for _ in range(reads)])
+            for _ in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert engine._store() is store
+    assert engine.backend_failures == 2 * (n_threads * reads + 1)
